@@ -827,7 +827,7 @@ object Curation {
 
   /** The gate over a PRE-TOKENIZED (doc_id, t) frame — the
     * tokenize-once seam [[pipelineCurate]] shares (round 12): callers
-    * hand in one cached tokens projection and every stage reads it. */
+    * hand in one materialized tokens projection and every stage reads it. */
   def qualityGateOf(toks: DataFrame): DataFrame = {
     // the gate's repetition flags use text_repetition's OWN aggregates —
     // one definition, no drift
@@ -1018,23 +1018,24 @@ object Curation {
     * 20): v2 tokens → ML gate → exact dedup by v2-token fingerprint —
     * the [[pipelineCurateOf]] survivors computation with every
     * tokenizer-touching stage swapped to script-aware, consumed by the
-    * ML release chain. Same tokenize-once seam: one cached (doc_id, t)
-    * projection feeds the gate's three passes and the fingerprint. */
+    * ML release chain. Same tokenize-once seam: one checkpointed
+    * (doc_id, t) projection feeds the gate's three passes and the
+    * fingerprint. */
   private[graft] def curateMlOf(docs: DataFrame): DataFrame = {
     val toks = docs
       .select(col("doc_id"), TextFns.tokensScript(col("text")).as("t"))
-      .cache()
+      .localCheckpoint()
     val kept = qualityGateMlOf(toks).filter(col("keep"))
       .select(col("doc_id"), col("n_tokens"))
     // GATE ONCE (r21 — the pipelineCurateOf r20 fix, mirrored): fp has
     // two consumers (survivor aggregate + final join) and each used to
-    // re-run the whole ML gate chain over the cached tokens; the frame
-    // is corpus-sized but narrow (id + count + one hash)
+    // re-run the whole ML gate chain over the tokens; the frame is
+    // corpus-sized but narrow (id + count + one hash)
     val fp = toks
       .join(kept, Seq("doc_id"))
       .select(col("doc_id"), col("n_tokens"),
         md5(concat_ws(" ", col("t"))).as("content_fp"))
-      .cache()
+      .localCheckpoint()
     val surv = fp.groupBy(col("content_fp"))
       .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_copies"))
     surv.join(fp.select(col("doc_id"), col("n_tokens")), Seq("doc_id"))
@@ -1052,7 +1053,7 @@ object Curation {
   // typically drop half the corpus before the expensive per-token
   // scoring). TOKENIZE ONCE (round 12): the r11 form re-tokenized the
   // corpus in each of the gate, fingerprint, and lang stages — 7.5 s /
-  // 3.6× growth at sf1; one cached (doc_id, t) projection now feeds
+  // 3.6× growth at sf1; one checkpointed (doc_id, t) projection feeds
   // all three (the r7 shared-fragment pattern applied to the plan, not
   // just the oracle). Plan: one tokenize scan, the gate's aggregation
   // passes, one fingerprint shuffle, then narrow per-row scoring.
@@ -1065,20 +1066,20 @@ object Curation {
   def pipelineCurateOf(docs: DataFrame): DataFrame = {
     val toks = docs
       .select(col("doc_id"), TextFns.tokens(col("text")).as("t"))
-      .cache() // the single tokenize: gate stats + grams, fp, lang
+      .localCheckpoint() // the single tokenize: gate stats + grams, fp, lang
     val kept = qualityGateOf(toks).filter(col("keep"))
       .select(col("doc_id"), col("n_tokens"))
     // GATE ONCE (r20, guide §1.2): fp has two consumers — the exact-dup
     // survivor aggregate and the final per-doc join — and each used to
     // re-run the whole gate chain (per-doc stats + BOTH gram-fraction
-    // shuffles) plus the md5 fingerprint pass over the cached tokens.
-    // The frame is corpus-sized but narrow (id + count + one hash);
-    // caching it halves the gate/fingerprint work (harness clears).
+    // shuffles) plus the md5 fingerprint pass over the tokens. The
+    // frame is corpus-sized but narrow (id + count + one hash);
+    // checkpointing it halves the gate/fingerprint work.
     val fp = toks
       .join(kept, Seq("doc_id"))
       .select(col("doc_id"), col("n_tokens"),
         md5(concat_ws(" ", col("t"))).as("content_fp"))
-      .cache()
+      .localCheckpoint()
     val surv = fp.groupBy(col("content_fp"))
       .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_copies"))
     toks

@@ -313,16 +313,16 @@ object Dedup {
     val docs = Tables.documents(spark, dir)
     val fp = docs.select(col("doc_id"),
       md5(concat_ws(" ", TextFns.tokens(col("text")))).as("content_fp"))
-      .cache() // feeds grouping, rep mapping, AND the final status join
+      .localCheckpoint() // feeds grouping, rep mapping, AND the final status join
     val exactGroups = fp.groupBy(col("content_fp"))
       .agg(min(col("doc_id")).as("exact_rep"))
-    val withRep = fp.join(exactGroups, Seq("content_fp")).cache()
+    val withRep = fp.join(exactGroups, Seq("content_fp")).localCheckpoint()
     val reps = docs.join(
       withRep.filter(col("doc_id") === col("exact_rep")).select(col("doc_id")),
       Seq("doc_id"), "left_semi")
 
     // near-dup among representatives only
-    val sh = shingleSets(maybeSpread(spark, reps)).cache()
+    val sh = shingleSets(maybeSpread(spark, reps)).localCheckpoint()
     val bands = bandsOfSig(minhashSignaturesComposable(sh))
     val cand = bands.select(col("doc_id").as("da"), col("band"), col("bh"))
       .join(bands.select(col("doc_id").as("db"), col("band"), col("bh")), Seq("band", "bh"))

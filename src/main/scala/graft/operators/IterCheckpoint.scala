@@ -23,6 +23,19 @@ import org.apache.spark.storage.StorageLevel
   * instead of diffing the context-global persistent-RDD set, so a
   * concurrent job persisting RDDs in the diff window can no longer be
   * captured and unpersisted by someone else's loop.
+  *
+  * Ownership rule for non-iterative operators (the serve and ingest
+  * paths: `Retrieval.bm25RankedFrom`, `Similarity.refineOf`, the PQ /
+  * IVFPQ builders, `Curation.pipelineCurateOf`, `Dedup.dedupPipeline`):
+  * a frame the operator reads more than once is a `Dataset.localCheckpoint()`,
+  * never a `cache()`, and the result stays lazy. The returned plan holds
+  * the checkpoint; once the caller drops the result, Spark's
+  * ContextCleaner frees its blocks, so neither the caller nor a harness
+  * releases anything, and a session that stays up (REST server,
+  * streaming loop) accumulates no cache-manager entries. Two kinds of
+  * frame stay as they are, because a checkpoint keeps neither property:
+  * one a consumer reuses for its hash partitioning, and one whose pruned
+  * scan must stay visible in the served plan (`Retrieval.bm25Of`).
   */
 private[graft] object IterCheckpoint {
 

@@ -25,7 +25,7 @@ import graft.functions.{TextFns, VectorFns}
   * tokenize scan for corpus stats and one explode whose output is
   * filtered against the broadcast query vocabulary BEFORE the tf
   * aggregate — so the shuffle carries query-term POSTINGS, not the
-  * corpus vocabulary. df comes from the same cached postings frame. At
+  * corpus vocabulary. df comes from the same checkpointed postings. At
   * 100 TB with a fixed query set this is a semi-join-pruned scan plus
   * postings-sized aggregates; nothing all-pairs, nothing vocab-wide.
   *
@@ -55,8 +55,8 @@ object Retrieval {
     * (postings semi-filtered BEFORE the tf aggregate) and the
     * materialized-index plan ([[bm25Of]]) produce the same qposts
     * relation on the query vocabulary, so sharing this tail makes their
-    * equality structural, not coincidental. Caller caches `qposts` — it
-    * feeds both the df aggregate and the candidate join. */
+    * equality structural, not coincidental. `qposts` feeds both the df
+    * aggregate and the candidate join; the result is a lazy plan. */
   private def bm25Score(qposts: DataFrame, qterms: DataFrame,
                         nDocs: Long, tToks: Long, k: Int): DataFrame = {
     val dfreq = qposts.groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -80,20 +80,6 @@ object Retrieval {
       .orderBy(col("qid"), col("rn"))
   }
 
-  /** [[bm25Score]] with cache lifecycle: materialize the query-sized
-    * result (≤ k rows/query), then RELEASE `qposts` — the serve paths
-    * run once per query batch in a long-lived session, and leaving a
-    * postings-sized cache behind per batch accumulates in executor
-    * storage memory. The returned frame stays cached (tiny); a caller
-    * serving unbounded batches owns unpersisting it when done. */
-  private def bm25ScoreReleasing(qposts: DataFrame, qterms: DataFrame,
-                                 nDocs: Long, tToks: Long, k: Int): DataFrame = {
-    val out = bm25Score(qposts, qterms, nDocs, tToks, k).cache()
-    out.count() // forces both qposts consumers (df agg + candidate join)
-    qposts.unpersist()
-    out
-  }
-
   /** BM25 top-`k` per probe query: (qid, rn, doc_id, score). */
   def bm25Ranked(spark: SparkSession, dir: String, k: Int): DataFrame =
     bm25RankedFrom(
@@ -109,29 +95,26 @@ object Retrieval {
     // TOKENIZE ONCE (r20 optimization, guide §1.2/§2.3): the tokenized
     // frame has four consumers — the corpus-scalar aggregate, the query
     // term sets (read twice: qvocab + the idf join), and the postings
-    // explode. Uncached, each consumer re-derived the full tokenize
-    // scan (the seg-token variant re-ran the whole segmentation chain
-    // per consumer — measured 7.1 s for text_bm25_topk_seg at sf0.1,
-    // ~3 full corpus passes); cached, the corpus is tokenized exactly
-    // once and released as soon as the query-sized result materializes
-    // (the pipelineCurateOf precedent). The cache spills to disk past
-    // storage memory; the production serve path remains the stored
+    // explode. Re-derived per consumer, the seg-token variant re-ran the
+    // whole segmentation chain each time (measured 7.1 s for
+    // text_bm25_topk_seg at sf0.1, ~3 full corpus passes); checkpointed,
+    // the corpus is tokenized exactly once (see [[IterCheckpoint]] for
+    // who frees it). The production serve path remains the stored
     // postings index (bm25TopkIndexed), which never re-tokenizes.
     val toks = toks0
       .select(col("doc_id"), col("ts"), size(col("ts")).as("dl"))
-      .cache()
+      .localCheckpoint()
     // corpus scalars N (docs) and T (tokens): a 2-value driver collect
-    // (coalesce: an empty corpus yields T=0, not a NULL→getLong NPE);
-    // this action also materializes the tokenize cache
+    // (coalesce: an empty corpus yields T=0, not a NULL→getLong NPE)
     val st = toks.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head
     val nDocs = st.getLong(0)
     val tToks = st.getLong(1)
-    // query term sets: probe-doc rows of the cache, broadcast everywhere;
-    // cached because bm25Score's idf join reads them again beside qvocab
+    // query term sets: probe-doc rows of the checkpoint, broadcast
+    // everywhere; bm25Score's idf join reads them again beside qvocab
     val qterms = toks.filter(isQuery)
       .select(col("doc_id").as("qid"), explode(col("ts")).as("term"))
       .distinct()
-      .cache()
+      .localCheckpoint()
     val qvocab = qterms.select(col("term")).distinct()
     // postings of query-vocabulary terms ONLY: the broadcast semi-filter
     // runs before the tf aggregate, so the one corpus shuffle is
@@ -141,13 +124,8 @@ object Retrieval {
       .join(broadcast(qvocab), "term")
       .groupBy(col("doc_id"), col("dl"), col("term"))
       .agg(count(lit(1)).as("tf"))
-      .cache()
-    val out = bm25ScoreReleasing(qposts, qterms, nDocs, tToks, k)
-    // out is materialized (bm25ScoreReleasing counts it) — the corpus-
-    // sized tokenize cache and the query-sized term cache are done
-    toks.unpersist()
-    qterms.unpersist()
-    out
+      .localCheckpoint()
+    bm25Score(qposts, qterms, nDocs, tToks, k)
   }
 
   def bm25Topk(spark: SparkSession, dir: String): DataFrame =
@@ -268,11 +246,13 @@ object Retrieval {
     // (inner join on a distinct key == IN on that key).
     val vocab = qterms.select(col("term")).distinct()
       .collect().map(_.getString(0)).toSeq
+    // Served lazily with no checkpoint: the pruned scan stays in the
+    // returned plan (and runs once per qposts consumer) instead of
+    // hiding behind a materialized frame.
     val qposts = (if (vocab.isEmpty) postings.filter(lit(false))
                   else postings.filter(col("term").isInCollection(vocab)))
       .select(col("doc_id"), col("dl"), col("term"), col("tf"))
-      .cache()
-    bm25ScoreReleasing(qposts, qterms, nDocs, tToks, k)
+    bm25Score(qposts, qterms, nDocs, tToks, k)
   }
 
   /** Incremental index maintenance — the `dedup_incremental` catalog

@@ -625,20 +625,14 @@ object Similarity {
       - lit(2) * VectorFns.dot(v, c), 6)
 
   /** All-subspace codebooks via one grouped Lloyd loop → (s, cid, cvec). */
-  def pqCodebooks(sub0: DataFrame, k: Int, iters: Int): DataFrame = {
-    val spark = sub0.sparkSession
+  def pqCodebooks(sub: DataFrame, k: Int, iters: Int): DataFrame = {
+    val spark = sub.sparkSession
     import spark.implicits._
-    // TRAIN INPUT CACHED ONCE (r20 optimization, guide §1.2): the
-    // trainer reads `sub` 1 + iters times (seed window, then one
-    // assign+update pass per round) — uncached, every pass re-derived
-    // the upstream subvector posexplode (and, on the IVFPQ path, the
-    // residual join) from scratch. Cache-manage the input HERE when the
-    // caller didn't: eagerly-collected rounds are the only consumers,
-    // so the cache is released before returning. A caller that cached
-    // `sub` for its own later use (the index builders' encode pass)
-    // keeps ownership — we neither re-cache nor unpersist it.
-    val ownCache = sub0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val sub = if (ownCache) sub0.cache() else sub0
+    // The trainer reads `sub` 1 + iters times (seed window, then one
+    // assign+update pass per round): callers hand in a checkpointed
+    // frame (r20 optimization, guide §1.2 — re-derived, every pass
+    // re-ran the subvector posexplode and, on the IVFPQ path, the
+    // residual join).
     // Same driver-resident Lloyd shape as [[kmeansCentroids]], grouped
     // by subspace: all PqM codebooks are PqM×k bounded vectors, so they
     // ride between rounds as ONE nested literal (indexed s+1, then cid)
@@ -658,10 +652,8 @@ object Similarity {
       .as[(Int, Int, Seq[Double])].collect()
     // empty corpus → empty codebook frame with the right schema, like
     // every other similarity operator degrades (no hard crash on .max)
-    if (seedRows.isEmpty) {
-      if (ownCache) sub.unpersist()
+    if (seedRows.isEmpty)
       return spark.emptyDataset[(Int, Int, Seq[Double])].toDF("s", "cid", "cvec")
-    }
     var cents: IndexedSeq[IndexedSeq[Seq[Double]]] = booksToNested(seedRows.toSeq)
     // posexplode two-phase update kept deliberately — see the
     // kmeansCentroidSeqs formulation note (the fused dim-column variant
@@ -683,8 +675,6 @@ object Similarity {
         cb.indices.map(i => updated.getOrElse((s, i + 1), cb(i)))
       }
     }
-    // every round collected eagerly — the input cache (if ours) is done
-    if (ownCache) sub.unpersist()
     spark.createDataset(for {
       (cb, s) <- cents.zipWithIndex
       (c, i) <- cb.zipWithIndex
@@ -791,6 +781,7 @@ object Similarity {
     val tops = kmeansCentroidSeqs(trainDf, k1, iters)
     val subTrain = assignCells(trainDf, tops).withColumnRenamed("cid", "cid1")
       .select((col("cid1") - 1).as("s"), col("vec_id"), col("vec").as("svec"))
+      .localCheckpoint()
     val books = pqCodebooks(subTrain, k2, iters)
       .as[(Int, Int, Seq[Double])].collect()
     val dim = tops.headOption.map(_.length).getOrElse(0)
@@ -1100,10 +1091,10 @@ object Similarity {
                 iters: Int = PqIters): (DataFrame, DataFrame) = {
     val spark = all.sparkSession
     import spark.implicits._
-    // cached: training reads it 1+iters times and the encode pass once
-    // more — one subvector materialization instead of 4 re-derivations
-    // (r20; the harness/serve loop clears or the builder's write ends it)
-    val sub = pqSubvectors(all).cache()
+    // checkpointed: training reads it 1+iters times and the encode pass
+    // once more — one subvector materialization instead of 4
+    // re-derivations (r20)
+    val sub = pqSubvectors(all).localCheckpoint()
     val books = pqCodebooks(sub, k, iters)
     val bookRows = books.as[(Int, Int, Seq[Double])].collect()
     val codes =
@@ -1576,11 +1567,13 @@ object Similarity {
     val spark = all.sparkSession
     import spark.implicits._
     val cells = labelCentroids(all) // driver-local relation (r21) — no cache needed
-    // cached: the residual join + subvector posexplode feeds training
-    // (1+iters passes) and the encode pass (r20 — see pqIndexOf).
-    // `label` rides through the subvectors (r21) so the encoded codes
-    // carry it directly — the previous corpus join-back is gone.
-    val sub = pqSubvectors(residualsOf(all, cells), keep = Seq("label")).cache()
+    // checkpointed: the residual join + subvector posexplode feeds
+    // training (1+iters passes) and the encode pass (r20 — see
+    // pqIndexOf). `label` rides through the subvectors (r21) so the
+    // encoded codes carry it directly — the previous corpus join-back
+    // is gone.
+    val sub = pqSubvectors(residualsOf(all, cells), keep = Seq("label"))
+      .localCheckpoint()
     val books = pqCodebooks(sub, k, iters)
     val bookRows = books.as[(Int, Int, Seq[Double])].collect()
     val codes =
@@ -1728,9 +1721,9 @@ object Similarity {
     val w = Window.partitionBy(col("qid"))
       .orderBy(col(scoreCol).desc, col("nid"))
     // candidate list is BOUNDED by construction (≤ queries × k ×
-    // RefineFactor rows), so it caches and its id set collects safely —
-    // the bm25Of releasing pattern. The collected ids become a LITERAL
-    // IN filter on the vector store: over a vec_id-BUCKETED store
+    // RefineFactor rows), so it checkpoints cheaply and its id set
+    // collects safely. The collected ids become a LITERAL IN filter on
+    // the vector store: over a vec_id-BUCKETED store
     // ([[vecStore]]) that is file-level bucket pruning — the refine
     // tail reads its candidates' buckets, not the corpus — and over a
     // flat frame it is a row filter the nid join subsumed anyway.
@@ -1739,15 +1732,17 @@ object Similarity {
       .filter(col("arn") <= k * RefineFactor)
       .select(col("qid"), col("nid"))
       .join(broadcast(queries), Seq("qid"))
-      .cache()
+      .localCheckpoint()
     val ids = cand.select(col("nid")).distinct()
     // ONE bounded job replaces the count-then-collect pair (r21): pull
     // at most budget+1 distinct ids — within budget the result IS the
     // whole set (so no separate count), over budget the semi-join path
     // serves without the full id set ever reaching the driver (the
     // round-15 concern, preserved — at most budget+1 rows land here).
+    // (clamped BEFORE the +1: a Long.MaxValue budget must not wrap to a
+    // negative limit and serve nothing)
     val budget = refineLiteralMax(spark)
-    val idsHead = ids.limit(math.min(budget + 1, Int.MaxValue.toLong).toInt)
+    val idsHead = ids.limit(math.max(0L, math.min(budget, Int.MaxValue - 1L)).toInt + 1)
       .collect().map(_.get(0))
     val overBudget = idsHead.length > budget
     // ADAPTIVE refine source (round 14, the bm25ServeStored pattern):
@@ -1804,12 +1799,8 @@ object Similarity {
         VectorFns.dot6(col("qvec"), col("nvec")).as("cos"))
     val wr = Window.partitionBy(col("qid"))
       .orderBy(col("cos").desc, col("nid"))
-    val out = rer.withColumn("rn", row_number().over(wr)).filter(col("rn") <= k)
+    rer.withColumn("rn", row_number().over(wr)).filter(col("rn") <= k)
       .orderBy(col("qid"), col("rn"))
-      .cache()
-    out.count() // forces both cand consumers; result is query-sized
-    cand.unpersist()
-    out
   }
 
   /** [[ivfPqIndexOf]] over the standard embeddings table — the spec /

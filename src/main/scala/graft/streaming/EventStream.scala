@@ -632,10 +632,6 @@ object EventStream {
         refineFlat = refineDir.map(d =>
           (Similarity.vecStoreFlatView(sp, d), Similarity.vecBuckets(sp, d))))
     served.write.mode("overwrite").parquet(s"$outPath/batch-$batchId")
-    // refineOf caches its query-sized result to decouple from its own
-    // intermediate cache; a forever-running serve must release it per
-    // batch or entries accumulate for the life of the query (ADVICE r13)
-    served.unpersist()
   }
 
   /** ONLINE HYBRID RETRIEVAL SERVING (round 13) — the streaming twin of

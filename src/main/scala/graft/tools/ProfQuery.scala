@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Bench-conditioned timing for ONE named SparkEntry query: codegen
   * warmed at sf0.001, caches cleared between reps (same protocol as
@@ -15,11 +15,7 @@ object ProfQuery {
     val name = args.headOption.orElse(sys.env.get("SPARK_GRAFT_QUERY"))
       .getOrElse(sys.error("pass a query name (arg or SPARK_GRAFT_QUERY)"))
     val fn = graft.SparkEntry.queries(name)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     fn(spark, "/root/testdata/sf0.001").count()
     spark.catalog.clearCache()

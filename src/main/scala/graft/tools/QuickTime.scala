@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Scratch A/B timing harness: time named gated queries for a given
   * number of reps under the Bench protocol (sf0.001 warmup, cache
@@ -11,13 +11,7 @@ object QuickTime {
     val dir = args(0)
     val names = args(1).split(",").toSeq
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { n => graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count() }
     spark.catalog.clearCache()

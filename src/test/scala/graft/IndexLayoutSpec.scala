@@ -178,6 +178,15 @@ class IndexLayoutSpec extends AnyFunSuite {
       assert(viaJoin.queryExecution.executedPlan.toString.contains("LeftSemi"),
         "over-budget refine should prune via a broadcast semi-join")
       assert(rJoin == rLiteral, "semi-join refine diverged from literal-IN refine")
+      // extreme budgets must not turn the bounded id collect into an
+      // empty limit (which served no rows at all): the largest wrapped
+      // on +1, a negative one took the limit below one id
+      Seq(Long.MaxValue, -1L).foreach { b =>
+        spark.conf.set("spark.graft.ann.refineLiteralMaxIds", b.toString)
+        val rB = Similarity.topkIvfPqIndexed(spark, sf)
+          .as[(Long, Long, Double, Int)].collect().toSet
+        assert(rB == rLiteral, s"literal budget $b changed the refined rows")
+      }
     } finally spark.conf.unset("spark.graft.ann.refineLiteralMaxIds")
   }
 
